@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The one Spark-internal call the benchmark needs: listener events are
+  * delivered asynchronously, so per-span task metrics are complete only
+  * after the listener bus has drained. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
