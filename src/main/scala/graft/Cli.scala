@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.compare.{Reports, Triples}
+import graft.search.Wand
+import graft.table.{Snapshot, SnapshotCatalog}
 
 /** spark-submit-able entry points mirroring the reference CLI
   * (cli.py:29-80: `stream`, `stream-report`, `dump-to-sqlite`,
@@ -97,24 +99,23 @@ object Cli {
     require(k > 0 && words.nonEmpty, "need k > 0 and a non-empty query")
     val text = words.mkString(" ")
     val q = Seq(graft.corpus.RefQuery(0, text))
+    val snap = SnapshotCatalog.current(spark, indexDir)
     val hits =
       if (words.exists(w => w.length > 1 && (w.startsWith("+") || w.startsWith("-"))))
-        graft.search.Wand.booleanSearch(spark, indexDir,
+        Wand.booleanSearchSnapshot(spark, snap,
           Seq(graft.search.BoolQuery.parse(0, text)), k)
       else if (words.exists(w => w.length > 1 && w.endsWith("*")))
-        graft.search.Wand.prefixSearch(spark, indexDir, q, k)
+        Wand.prefixSearchSnapshot(spark, snap, q, k)
       else if (words.exists(w => w.length > 1 && w.endsWith("~")))
-        graft.search.Wand.fuzzySearch(spark, indexDir, q, k)
-      else graft.search.Wand.search(spark, indexDir, q, k)
-    resolveHits(spark, indexDir, hits)
+        Wand.fuzzySearchSnapshot(spark, snap, q, k)
+      else Wand.searchSnapshot(spark, snap, q, k)
+    resolveHits(spark, snap, hits)
   }
 
   /** Resolve engine hits against the docmap into the CLI's display
     * shape — shared by every hit-returning command. */
-  private def resolveHits(spark: SparkSession, indexDir: String,
+  private def resolveHits(spark: SparkSession, snap: Snapshot,
                           hits: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val snap = graft.table.SnapshotCatalog.load(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $indexDir"))
     val dm = spark.read.parquet(snap.docmapDirs: _*)
       .select(col("doc_id"), col("repo"), col("path"))
     hits.join(dm, "doc_id")
@@ -131,8 +132,9 @@ object Cli {
                               k: Int, text: String,
                               defaultAnd: Boolean = false): org.apache.spark.sql.DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    resolveHits(spark, indexDir,
-      graft.search.SimpleQueryString.search(spark, indexDir,
+    val snap = SnapshotCatalog.current(spark, indexDir)
+    resolveHits(spark, snap,
+      graft.search.SimpleQueryString.searchSnapshot(spark, snap,
         Seq(0 -> text), k, defaultAnd))
   }
 
@@ -224,21 +226,21 @@ object Cli {
     // index-lifecycle maintenance over the snapshot catalog
     case "history" :: indexDir :: Nil =>
       val spark = session()
-      graft.table.SnapshotCatalog.history(spark, indexDir)
+      SnapshotCatalog.history(spark, indexDir)
         .orderBy("id").show(10000, false)
       spark.stop()
 
     case "stats" :: indexDir :: rest if rest.size <= 1 &&
         rest.forall(_.toLongOption.exists(_ >= 0)) =>
       val spark = session()
-      graft.table.SnapshotCatalog.describe(spark, indexDir,
+      SnapshotCatalog.describe(spark, indexDir,
         rest.headOption.map(_.toLong).getOrElse(-1L)).show(false)
       spark.stop()
 
     case "changes" :: indexDir :: from :: to :: Nil
         if from.toLongOption.exists(_ >= 0) && to.toLongOption.exists(_ >= 0) =>
       val spark = session()
-      graft.table.SnapshotCatalog.changes(spark, indexDir, from.toLong, to.toLong)
+      SnapshotCatalog.changes(spark, indexDir, from.toLong, to.toLong)
         .orderBy("change", "doc_id").show(10000, false)
       spark.stop()
 
@@ -256,7 +258,8 @@ object Cli {
     case "complete" :: indexDir :: n :: prefixes
         if n.toIntOption.exists(_ > 0) && prefixes.nonEmpty =>
       val spark = session()
-      graft.search.Wand.complete(spark, indexDir, prefixes, n.toInt)
+      Wand.completeSnapshot(spark, SnapshotCatalog.current(spark, indexDir),
+          prefixes, n.toInt)
         .orderBy("prefix", "rank").show(10000, false)
       spark.stop()
 
@@ -264,13 +267,13 @@ object Cli {
     // `suggest-phrase` = did-you-mean over the whole phrase + collation
     case "suggest" :: indexDir :: words if words.nonEmpty =>
       val spark = session()
-      graft.search.Wand.suggest(spark, indexDir, words)
+      Wand.suggestSnapshot(spark, SnapshotCatalog.current(spark, indexDir), words)
         .orderBy("word", "rank").show(10000, false)
       spark.stop()
 
     case "suggest-phrase" :: indexDir :: words if words.nonEmpty =>
       val spark = session()
-      graft.search.Wand.phraseSuggest(spark, indexDir,
+      Wand.phraseSuggestSnapshot(spark, SnapshotCatalog.current(spark, indexDir),
         Seq(graft.corpus.RefQuery(0, words.mkString(" "))))
         .select("suggestion", "changed", "collate_match").show(false)
       spark.stop()
@@ -296,7 +299,7 @@ object Cli {
 
     case "expire" :: indexDir :: retain :: Nil if retain.toIntOption.exists(_ >= 1) =>
       val spark = session()
-      val r = graft.table.SnapshotCatalog.expireSnapshots(spark, indexDir, retain.toInt)
+      val r = SnapshotCatalog.expireSnapshots(spark, indexDir, retain.toInt)
       println(s"expired ${r.expiredIds.size} snapshots" +
         (if (r.expiredIds.nonEmpty) s" (${r.expiredIds.mkString(", ")})" else "") +
         s"; deleted ${r.deletedDirs.size} data dirs")
@@ -304,7 +307,7 @@ object Cli {
 
     case "rollback" :: indexDir :: id :: Nil if id.toLongOption.isDefined =>
       val spark = session()
-      val snap = graft.table.SnapshotCatalog.rollback(spark, indexDir, id.toLong)
+      val snap = SnapshotCatalog.rollback(spark, indexDir, id.toLong)
       println(s"rolled back to the state of snapshot $id as new snapshot ${snap.id}")
       spark.stop()
 

@@ -1261,8 +1261,7 @@ object SparkEntry {
       stageEngineToks(s, d, engineCorpus(s, d), "q145", corpusKey = "base")
       val lid = s.read.parquet(snap.docmapDirs: _*)
         .filter(col("path") === "7").select("doc_id").head().getString(0)
-      val res = graft.search.Wand.termsLookupSearch(s,
-        sharedIndexDir(d, positions = false), 0, lid, 10)
+      val res = graft.search.Wand.termsLookupSearchSnapshot(s, snap, 0, lid, 10)
       val dm = s.read.parquet(snap.docmapDirs: _*).select(col("doc_id"), col("path"))
       res.join(dm, "doc_id")
         .select(col("query_id"), col("rank"),
@@ -1274,12 +1273,12 @@ object SparkEntry {
     //      takes Painless — shard-local combine, ordered reduce ----
     "q146_engine_scripted_metric" -> ((s, d) => {
       import s.implicits._
-      sharedIndex(s, d)
+      val snap = sharedIndex(s, d)
       stageEngineToks(s, d, engineCorpus(s, d), "q146", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "join filter"))
-      graft.search.Wand.scriptedMetricAgg[(Long, Long, Long), (Long, Long, Long)](
-          s, sharedIndexDir(d, positions = false), qs,
+      graft.search.Wand.scriptedMetricAggSnapshot[(Long, Long, Long), (Long, Long, Long)](
+          s, snap, qs,
           r => (1L, r.getAs[Long]("dl"), r.getAs[Long]("dl")),
           (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)),
           xs => xs.reduce((a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3))))
@@ -1385,7 +1384,8 @@ object SparkEntry {
       val idxDir = sharedIndexDir(d, false)
       val qs = Seq(graft.corpus.RefQuery(0, "spark"),
         graft.corpus.RefQuery(1, "filter group"))
-      graft.search.Wand.significantTerms(s, idxDir, qs, 10)
+      graft.search.Wand.significantTermsSnapshot(s,
+          graft.table.SnapshotCatalog.current(s, idxDir), qs, 10)
         .select(col("query_id"), col("rank"), col("term"), col("fg_df"),
           col("bg_df"), round(col("score"), 6).as("score"))
         .orderBy("query_id", "rank")
@@ -1573,9 +1573,9 @@ object SparkEntry {
       } finally stagedGood.unpersist(false)
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "part filter"))
-      val res = graft.search.Wand.rescorePhrase(s, idxDir, qs, 10, 30,
+      val snap2 = graft.table.SnapshotCatalog.current(s, idxDir)
+      val res = graft.search.Wand.rescorePhraseSnapshot(s, snap2, qs, 10, 30,
         slop = 2, queryWeight = 1.0, rescoreWeight = 2.0)
-      val snap2 = graft.table.SnapshotCatalog.load(s, idxDir).get
       val dm = s.read.parquet(snap2.docmapDirs: _*)
         .select(col("doc_id"), col("path"))
       res.join(dm, "doc_id")
@@ -1892,8 +1892,8 @@ object SparkEntry {
         graft.corpus.RefQuery(1, "filter join"))
       val named = Map("has_data" -> "data", "has_group" -> "group sort",
         "never" -> "zzznosuchterm")
-      val res = graft.search.Wand.namedQueriesSearch(s, idxDir, qs, named, 10)
-      val snap2 = graft.table.SnapshotCatalog.load(s, idxDir).get
+      val snap2 = graft.table.SnapshotCatalog.current(s, idxDir)
+      val res = graft.search.Wand.namedQueriesSearchSnapshot(s, snap2, qs, named, 10)
       val dm = s.read.parquet(snap2.docmapDirs: _*)
         .select(col("doc_id"), col("path"))
       res.join(dm, "doc_id")
@@ -1960,7 +1960,8 @@ object SparkEntry {
         .filter(col("rating") > 0)
       val qidDf = { import s.implicits._; qs.map(_.query_id).toDF("query_id") }
       val ratings = docRatings.crossJoin(qidDf)
-      graft.search.Wand.rankEval(s, idxDir, qs, ratings, 10)
+      graft.search.Wand.rankEvalSnapshot(s,
+          graft.table.SnapshotCatalog.current(s, idxDir), qs, ratings, 10)
         .select(col("query_id"), col("retrieved"), col("relevant_retrieved"),
           round(col("precision"), 4).as("precision"),
           round(col("recall"), 4).as("recall"),
@@ -2041,8 +2042,8 @@ object SparkEntry {
         .collect().sortBy(_.getString(1).toLong).map(_.getString(0)).toSeq
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter join"))
-      val res = graft.search.Wand.pinnedSearch(s, idxDir, qs, pinnedIds, 8)
-      val snap2 = graft.table.SnapshotCatalog.load(s, idxDir).get
+      val snap2 = graft.table.SnapshotCatalog.current(s, idxDir)
+      val res = graft.search.Wand.pinnedSearchSnapshot(s, snap2, qs, pinnedIds, 8)
       val dm = s.read.parquet(snap2.docmapDirs: _*)
         .select(col("doc_id"), col("path"))
       res.join(dm, "doc_id")
@@ -2766,8 +2767,8 @@ object SparkEntry {
       } finally stagedGood.unpersist(false)
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter join"))
-      val res = graft.search.Wand.highlightSearch(s, idxDir, qs, 10, fragSize = 8)
-      val snap2 = graft.table.SnapshotCatalog.load(s, idxDir).get
+      val snap2 = graft.table.SnapshotCatalog.current(s, idxDir)
+      val res = graft.search.Wand.highlightSearchSnapshot(s, snap2, qs, 10, fragSize = 8)
       val dm = s.read.parquet(snap2.docmapDirs: _*)
         .select(col("doc_id"), col("path"))
       res.join(dm, "doc_id")
@@ -3223,7 +3224,8 @@ object SparkEntry {
         stagedGood.filter(col("doc_id").isin(0L, 1L, 2L))
           .select("sha_id").collect().map(_.getString(0)).toSeq
       } finally stagedGood.unpersist(false)
-      graft.search.Wand.termVectors(s, idxDir, ids)
+      graft.search.Wand.termVectorsSnapshot(s,
+          graft.table.SnapshotCatalog.current(s, idxDir), ids)
         .orderBy("doc_id", "term")
     }),
 
@@ -3416,7 +3418,8 @@ object SparkEntry {
         Seq(graft.corpus.RefQuery(9, "dup")))
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.search(s, idxDir, qs, 10)
+      graft.search.Wand.searchSnapshot(s,
+          graft.table.SnapshotCatalog.current(s, idxDir), qs, 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
           round(col("score"), 4).as("score"))
         .orderBy("query_id", "rank")
@@ -3449,7 +3452,8 @@ object SparkEntry {
       graft.index.IndexBuilder.upsert(s, batch, idxDir)
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "upsertmarker shuffle"))
-      graft.search.Wand.search(s, idxDir, qs, 10)
+      graft.search.Wand.searchSnapshot(s,
+          graft.table.SnapshotCatalog.current(s, idxDir), qs, 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
           round(col("score"), 4).as("score"))
         .orderBy("query_id", "rank")

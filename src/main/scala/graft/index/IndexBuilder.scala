@@ -65,7 +65,7 @@ case class BuildConfig(
       * termstats finalize — the documented two-commit torn window */
     failBeforeFinalize: Boolean = false,
     /** store per-posting in-document token positions (Lucene proximity
-      * data) — required for phrase queries ([[graft.search.Wand.phraseSearch]]).
+      * data) — required for phrase queries ([[graft.search.Wand.phraseSearchSnapshot]]).
       * Sticky per index: the flag is recorded in the snapshot at stage
       * time, and appends/compactions follow the SNAPSHOT's flag, never
       * this one, so one index never mixes positional and positionless
@@ -649,7 +649,7 @@ object IndexBuilder {
 
   /** Every staged row of the index (full build + all appended batches)
     * under the explicit schema — the durable per-doc token record that
-    * term deltas and [[graft.search.Wand.significantTerms]] recompute
+    * term deltas and [[graft.search.Wand.significantTermsSnapshot]] recompute
     * from. One read per staging root, unioned: each root is independently
     * shard-partitioned, and multi-root partition discovery rejects
     * "conflicting directory structures". Includes tombstoned and
@@ -659,6 +659,17 @@ object IndexBuilder {
       .map(p => spark.read.schema(stagedSchema).parquet(p))
       .reduceOption(_ unionByName _)
       .getOrElse(throw new IllegalStateException(s"no staging dirs under $dir"))
+
+  /** [[stagedRows]] of the index a complete snapshot was committed to.
+    * Every termstats dir is `<index>/termstats/<tag>`, so the index dir is
+    * its grandparent. */
+  private[graft] def stagedRows(spark: SparkSession, snap: Snapshot): DataFrame =
+    stagedRows(spark, indexDirOf(snap))
+
+  private[graft] def indexDirOf(snap: Snapshot): String = {
+    require(snap.termstatsDir.nonEmpty, s"snapshot ${snap.id} is not a complete index")
+    new org.apache.hadoop.fs.Path(snap.termstatsDir).getParent.getParent.toString
+  }
 
   /** All staging dirs under the index: the full-build staging plus one per
     * appended batch. Staged token arrays are the durable record delete and
@@ -757,8 +768,7 @@ object IndexBuilder {
   def reindex(spark: SparkSession, srcDir: String, dstDir: String,
               cfg: BuildConfig = BuildConfig()): Snapshot = {
     require(srcDir != dstDir, "reindex needs a fresh destination dir")
-    val src = SnapshotCatalog.load(spark, srcDir).getOrElse(
-      throw new IllegalStateException(s"reindex: no committed snapshot at $srcDir"))
+    val src = SnapshotCatalog.current(spark, srcDir)
     require(src.isComplete,
       s"reindex requires a complete source index (snapshot ${src.id} is not)")
     val loaded = SnapshotCatalog.load(spark, dstDir)
@@ -951,8 +961,7 @@ object IndexBuilder {
   private def appendImpl(spark: SparkSession, batch: Dataset[SourceFile],
                          dir: String, cfgIn: BuildConfig,
                          liveOnly: Boolean): Snapshot = {
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"append: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.current(spark, dir)
     require(parent.isComplete,
       s"append requires a complete base index (snapshot ${parent.id} is not)")
     val cfg = cfgIn.copy(numShards = parent.numShards)
@@ -1019,8 +1028,7 @@ object IndexBuilder {
     * doc_id; no token arrays move until the append's staging pass. */
   def upsert(spark: SparkSession, batch: Dataset[SourceFile], dir: String,
              cfgIn: BuildConfig = BuildConfig()): Snapshot = {
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"upsert: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.current(spark, dir)
     require(parent.isComplete,
       s"upsert requires a complete base index (snapshot ${parent.id} is not)")
     val cfg = cfgIn.copy(numShards = parent.numShards)
@@ -1067,8 +1075,7 @@ object IndexBuilder {
   private[graft] def deleteVictims(spark: SparkSession, dir: String,
       selectVictims: (Snapshot, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
       cfgIn: BuildConfig = BuildConfig()): Snapshot = {
-    val parent0 = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"delete: no committed snapshot at $dir"))
+    val parent0 = SnapshotCatalog.current(spark, dir)
     require(parent0.isComplete,
       s"delete requires a complete index (snapshot ${parent0.id} is not)")
     val cfg = cfgIn.copy(numShards = parent0.numShards)
@@ -1160,8 +1167,7 @@ object IndexBuilder {
   def mget(spark: SparkSession, dir: String, docIds: Seq[String]): DataFrame = {
     import spark.implicits._
     require(docIds.nonEmpty, "mget needs at least one doc id")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"mget: no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.current(spark, dir)
     val ids = docIds.distinct
     val dead = deadAddrs(spark, snap, ids)
     val rows = spark.read.parquet(snap.docmapDirs: _*)
@@ -1223,8 +1229,7 @@ object IndexBuilder {
   def updateMetadata(spark: SparkSession, dir: String,
       selectTargets: (Snapshot, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
       set: Map[String, org.apache.spark.sql.Column]): Snapshot = {
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"update: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.current(spark, dir)
     require(parent.isComplete,
       s"update requires a complete index (snapshot ${parent.id} is not)")
     require(set.nonEmpty, "update: empty set clause")
@@ -1285,8 +1290,7 @@ object IndexBuilder {
     *         postings long, avgdl double, positional boolean) */
   def indexStats(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val snap = graft.table.SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.current(spark, dir)
     require(snap.isComplete, s"snapshot ${snap.id} is not a complete index")
     val docs = spark.read.parquet(snap.docmapDirs: _*).count()
     // tombstone generations are disjoint by construction (deleteVictims
@@ -1338,8 +1342,7 @@ object IndexBuilder {
   def compact(spark: SparkSession, dir: String,
               cfgIn: BuildConfig = BuildConfig()): Snapshot = {
     import spark.implicits._
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"compact: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.current(spark, dir)
     require(parent.isComplete,
       s"compact requires a complete index (snapshot ${parent.id} is not)")
     val cfg = cfgIn.copy(numShards = parent.numShards)

@@ -88,7 +88,7 @@ object Golden {
     * the source of truth the paged engine is compared against.
     *
     * @param docmap (doc_id, shard, ord) — the snapshot's committed docmap
-    * @param after per-query (score, shard, ord) cursor, as [[Wand.searchAfter]]
+    * @param after per-query (score, shard, ord) cursor, as [[Wand.searchAfterSnapshot]]
     * @return (query_id int, rank int [page-relative], doc_id string,
     *         score double, shard int, ord long) */
   def topKAfter(spark: SparkSession, docs: DataFrame, queries: Seq[RefQuery],
@@ -119,7 +119,7 @@ object Golden {
   /** [[topK]] with each query given directly as its analyzed term set
     * (distinct, ascending) — the entry point for callers that expand
     * queries themselves (e.g. [[Wand.expandQueries]] prefix queries).
-    * `from` mirrors [[Wand.search]]'s pagination offset: ranks
+    * `from` mirrors [[Wand.searchSnapshot]]'s pagination offset: ranks
     * (from, from + k] with absolute rank numbers. */
   def topKTerms(spark: SparkSession, docs: DataFrame,
                 qTerms: Map[Int, Array[String]], k: Int,
@@ -135,7 +135,7 @@ object Golden {
   }
 
   /** Exact boosted top-k — the golden counterpart of
-    * [[Wand.boostedSearch]]: per-(query, term) weights multiply the
+    * [[Wand.boostedSearchSnapshot]]: per-(query, term) weights multiply the
     * term's idf before the tf-norm product ((idf × boost) × tfNorm, the
     * shared association order), contributions summed ascending by term.
     * `qBoost` is [[queryTermsBoosted]] output per query. */
@@ -281,7 +281,7 @@ object Golden {
   }
 
   /** The shared secondary scorer of [[rescorePhraseTopK]] and
-    * [[Wand.rescorePhrase]] — ONE definition so the two engines are
+    * [[Wand.rescorePhraseSnapshot]] — ONE definition so the two engines are
     * bit-identical by construction: 0.0 when the doc does not contain the
     * phrase (within `slop`), else the BM25 sum over the phrase's DISTINCT
     * terms in ascending term order (the engine-wide summation contract),
@@ -305,7 +305,7 @@ object Golden {
     }
   }
 
-  /** Exact rescore — the golden counterpart of [[Wand.rescorePhrase]]
+  /** Exact rescore — the golden counterpart of [[Wand.rescorePhraseSnapshot]]
     * (the OpenSearch `rescore` clause with a `match_phrase` rescorer,
     * `score_mode: total`): the base BM25 top-`window` hits are re-ranked
     * by `queryWeight × base + rescoreWeight × secondary`, where the
@@ -527,7 +527,7 @@ object Golden {
   }
 
   /** Exact span-query top-k — the golden counterpart of
-    * [[Wand.spanSearch]]: each query is a [[SpanQuery]] AST evaluated by
+    * [[Wand.spanSearchSnapshot]]: each query is a [[SpanQuery]] AST evaluated by
     * [[Spans.spans]] over per-term position lists built directly from the
     * document's token array (the brute-force source of truth the
     * positional index is compared against). A hit must produce at least
@@ -599,7 +599,7 @@ object Golden {
   }
 
   /** Exact boolean (`must`/`should`/`must_not`) top-k — the golden
-    * counterpart of [[Wand.booleanSearch]], Lucene `bool`-query semantics
+    * counterpart of [[Wand.booleanSearchSnapshot]], Lucene `bool`-query semantics
     * (see [[BoolQuery]]): a hit contains every `must` term and no
     * `mustNot` term (with no `must` clause, at least one `should` term);
     * the score is the BM25 sum over the scoring terms present, summed in

@@ -1,7 +1,7 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.table.{Snapshot, SnapshotCatalog}
+import graft.table.Snapshot
 
 /** The OpenSearch `simple_query_string` query: a small, LENIENT query
   * language end users can type directly —
@@ -278,7 +278,7 @@ object SimpleQueryString {
 
   /** Parse against a snapshot's term dictionary (prefix leaves expand
     * in one pass per call — queries with several prefixes share it via
-    * [[search]]). */
+    * [[searchSnapshot]]). */
   def parse(spark: SparkSession, snap: Snapshot, text: String,
             defaultAnd: Boolean = false,
             maxExpansions: Int = 128): Option[SpanQuery] = {
@@ -339,15 +339,6 @@ object SimpleQueryString {
     * fan-out. Queries that parse to nothing scoring simply contribute
     * no rows — lenient, never throws on user syntax.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def search(spark: SparkSession, dir: String, queries: Seq[(Int, String)],
-             k: Int, defaultAnd: Boolean = false,
-             maxExpansions: Int = 128,
-             filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    searchSnapshot(spark, snap, queries, k, defaultAnd, maxExpansions, filter)
-  }
-
   def searchSnapshot(spark: SparkSession, snap: Snapshot,
                      queries: Seq[(Int, String)], k: Int,
                      defaultAnd: Boolean = false,

@@ -17,11 +17,11 @@ package graft.search
   *
   * Both engines evaluate matches through this one object — the golden
   * scorer from the raw token arrays ([[Golden.spanTopK]]) and the WAND
-  * engine from decoded posting positions ([[Wand.spanSearch]]) — so the
+  * engine from decoded posting positions ([[Wand.spanSearchSnapshot]]) — so the
   * match predicate is bit-identical by construction.
   *
   * Scoring contract (the term-level contract an ANSI-SQL oracle can
-  * replay, same discipline as [[Wand.phrasePrefixSearch]]'s documented
+  * replay, same discipline as [[Wand.phrasePrefixSearchSnapshot]]'s documented
   * divergence from Lucene's blended weights): a matching doc scores the
   * BM25 sum over the tree's distinct SCORING terms present in the doc,
   * summed in ascending term order. Scoring terms follow Lucene's weight
@@ -39,7 +39,7 @@ case class SpanTerm(term: String) extends SpanQuery
   * clause i+1 must start at or after clause i's end, and the total gap
   * `(chainEnd - chainStart) - Σ chosen sub-span widths` must be ≤ `slop`.
   * For term clauses this is exactly the sloppy-phrase budget
-  * `(p_last - p_0) - (m - 1) ≤ slop` of [[Wand.phraseSearch]]. */
+  * `(p_last - p_0) - (m - 1) ≤ slop` of [[Wand.phraseSearchSnapshot]]. */
 case class SpanNear(clauses: Seq[SpanQuery], slop: Int) extends SpanQuery
 
 /** Union of the clauses' spans (Lucene `span_or`). */

@@ -59,7 +59,7 @@ object Aliases {
       s"duplicate alias targets: $targets")
     targets.foreach { d =>
       require(SnapshotCatalog.load(spark, d).isDefined,
-        s"alias target has no committed snapshot: $d")
+        s"alias target is not a committed index: $d")
     }
     val f = fs(spark, root)
     f.mkdirs(new Path(aliasesDir(root)))

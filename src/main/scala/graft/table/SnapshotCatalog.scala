@@ -136,6 +136,13 @@ object SnapshotCatalog {
     }
   }
 
+  /** The CURRENT snapshot of the index at `dir` — the one way every read
+    * (and every write that extends the current state) opens an index.
+    * @throws IllegalStateException when nothing was ever committed at `dir` */
+  def current(spark: SparkSession, dir: String): Snapshot =
+    load(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $dir"))
+
   private val VersionFile = "v(\\d{5,})\\.json".r
 
   def loadId(spark: SparkSession, dir: String, id: Long): Snapshot = {
@@ -204,9 +211,7 @@ object SnapshotCatalog {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val s =
-      if (snapshotId < 0) load(spark, dir).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $dir"))
-      else loadId(spark, dir, snapshotId)
+      if (snapshotId < 0) current(spark, dir) else loadId(spark, dir, snapshotId)
     require(s.isComplete, s"snapshot ${s.id} is not a complete index")
     val tsRow = spark.read.parquet(s.termstatsDir)
       .agg(count(lit(1)), coalesce(sum(col("df")), lit(0L)),
@@ -289,8 +294,7 @@ object SnapshotCatalog {
   def rollback(spark: SparkSession, dir: String, toId: Long): Snapshot = {
     val target = loadId(spark, dir, toId)
     require(target.isComplete, s"rollback target $toId is not a complete snapshot")
-    val cur = load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"rollback: no committed snapshot at $dir"))
+    val cur = current(spark, dir)
     if (cur.id == toId) return cur
     val newId = listIds(spark, dir).max + 1
     val snap = target.copy(id = newId, parentId = cur.id,

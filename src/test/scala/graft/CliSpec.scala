@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.compare.{DiffEntry, ParsedRequest, ParsedResponse, Reports, Triple}
+import graft.table.SnapshotCatalog
 
 /** The CLI's export surface (K3/K4 wired to `report`/`stream` — the
   * reference's `stream-report --export-reports` workflow, cli.py:43-63).
@@ -70,25 +71,26 @@ class CliSpec extends AnyFunSuite {
     assert(got.select("rank").as[Int].collect().toSeq == (1 to 5))
     // docmap resolution: every row carries the corpus repo/path identity
     assert(got.filter($"repo".isNull || $"path".isNull).count() == 0)
-    val expOr = graft.search.Wand.search(spark, dir,
+    val snap = SnapshotCatalog.current(spark, dir)
+    val expOr = graft.search.Wand.searchSnapshot(spark, snap,
       Seq(graft.corpus.RefQuery(0, "spark query")), 5)
     assert(got.select("rank", "doc_id").as[(Int, String)].collect().toSet ==
       expOr.select("rank", "doc_id").as[(Int, String)].collect().toSet)
     got.unpersist(false)
     // boolean marker dispatch: must_not excludes its term from every hit
     val bool = Cli.runSearch(spark, dir, 5, Seq("+spark", "-merge"))
-    val expBool = graft.search.Wand.booleanSearch(spark, dir,
+    val expBool = graft.search.Wand.booleanSearchSnapshot(spark, snap,
       Seq(graft.search.BoolQuery.parse(0, "+spark -merge")), 5)
     assert(bool.select("rank", "doc_id").as[(Int, String)].collect().toSet ==
       expBool.select("rank", "doc_id").as[(Int, String)].collect().toSet)
     // prefix and fuzzy markers route to their expansions
     val pre = Cli.runSearch(spark, dir, 5, Seq("spar*"))
-    val expPre = graft.search.Wand.prefixSearch(spark, dir,
+    val expPre = graft.search.Wand.prefixSearchSnapshot(spark, snap,
       Seq(graft.corpus.RefQuery(0, "spar*")), 5)
     assert(pre.select("rank", "doc_id").as[(Int, String)].collect().toSet ==
       expPre.select("rank", "doc_id").as[(Int, String)].collect().toSet)
     val fuz = Cli.runSearch(spark, dir, 5, Seq("sparc~"))
-    val expFuz = graft.search.Wand.fuzzySearch(spark, dir,
+    val expFuz = graft.search.Wand.fuzzySearchSnapshot(spark, snap,
       Seq(graft.corpus.RefQuery(0, "sparc~")), 5)
     assert(fuz.select("rank", "doc_id").as[(Int, String)].collect().toSet ==
       expFuz.select("rank", "doc_id").as[(Int, String)].collect().toSet)

@@ -48,7 +48,7 @@ class ChaosSpec extends AnyFunSuite {
         .select($"doc_id", $"content")
       val golden = Golden.topK(spark, docs, queries, k)
         .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-      val fast = Wand.search(spark, dir, queries, k)
+      val fast = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dir), queries, k)
         .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
       val bad = golden.join(fast, Seq("query_id", "rank"), "full_outer")
         .filter($"g_doc".isNull || $"f_doc".isNull ||

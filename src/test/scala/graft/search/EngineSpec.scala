@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.corpus.CorpusGen
 import graft.index.{BuildConfig, IndexBuilder}
+import graft.table.SnapshotCatalog
 
 /** The golden end-to-end comparison — the reference's signature discipline
   * (test_response_comparison.py:100-116 writ large): exact scorer
@@ -74,6 +75,15 @@ class EngineSpec extends AnyFunSuite {
       .select("query_id", "rank", "doc_id", "score")
       .as[(Int, Int, String, Double)].collect().toSet
     assert(gotBig == gotSmall)
+  }
+
+  test("a malformed spark.graft.decodeCacheMb fails the search naming the key") {
+    spark.conf.set("spark.graft.decodeCacheMb", "12x")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Wand.searchSnapshot(spark, snap, queries.take(1), k))
+      assert(e.getMessage.contains("spark.graft.decodeCacheMb"))
+    } finally spark.conf.unset("spark.graft.decodeCacheMb")
   }
 
   test("index builds completely with lineage for every shard") {
@@ -327,11 +337,12 @@ class EngineSpec extends AnyFunSuite {
     val qs = Seq(graft.corpus.RefQuery(0, "livemarker"))
     // without the tombstone mask each hit would duplicate — one row
     // rendered from the STALE token array (which lacks the marker)
-    val hl = Wand.highlightSearch(spark, dirL, qs, 50).cache()
+    val hl = Wand.highlightSearchSnapshot(spark, SnapshotCatalog.current(spark, dirL),
+        qs, 50).cache()
     assert(hl.count() == math.min(50L, nChanged))
     assert(hl.groupBy($"query_id", $"rank").count().filter($"count" > 1).count() == 0)
     assert(hl.filter(!$"highlight".contains("<em>livemarker</em>")).count() == 0)
-    val nq = Wand.namedQueriesSearch(spark, dirL, qs,
+    val nq = Wand.namedQueriesSearchSnapshot(spark, SnapshotCatalog.current(spark, dirL), qs,
       Map("m" -> "livemarker"), 50).cache()
     assert(nq.count() == math.min(50L, nChanged))
     assert(nq.groupBy($"query_id", $"rank").count().filter($"count" > 1).count() == 0)
@@ -385,7 +396,8 @@ class EngineSpec extends AnyFunSuite {
     IndexBuilder.build(spark, all, dirT, BuildConfig(numShards = 4, commitEvery = 4))
     val reqIds = all.toDF().limit(3)
       .select(IndexBuilder.docIdCol).as[String].collect().toSeq
-    val got = Wand.termVectors(spark, dirT, reqIds ++ Seq("nosuchdoc"))
+    val got = Wand.termVectorsSnapshot(spark, SnapshotCatalog.current(spark, dirT),
+        reqIds ++ Seq("nosuchdoc"))
       .as[(String, String, Long, String, Long, Long)].collect()
     // independent recount straight off the tokenized corpus
     val toks = all.toDF().select(IndexBuilder.docIdCol.as("doc_id"),
@@ -410,7 +422,7 @@ class EngineSpec extends AnyFunSuite {
     // delete the first requested doc: it must vanish from the output and
     // the survivors' df/ttf must shrink to the post-delete termstats
     IndexBuilder.delete(spark, dirT, col("doc_id") === reqIds.head)
-    val after = Wand.termVectors(spark, dirT, reqIds)
+    val after = Wand.termVectorsSnapshot(spark, SnapshotCatalog.current(spark, dirT), reqIds)
       .as[(String, String, Long, String, Long, Long)].collect()
     assert(!after.exists(_._1 == reqIds.head))
     val deadToks = toks.filter($"doc_id" === reqIds.head)
@@ -448,7 +460,7 @@ class EngineSpec extends AnyFunSuite {
     // must not)
     val deadId = expHit.head
     IndexBuilder.delete(spark, dirU, col("doc_id") === deadId)
-    val pre = Wand.search(spark, dirU, qs, 5)
+    val pre = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dirU), qs, 5)
       .select("query_id", "rank", "doc_id", "score")
       .as[(Int, Int, String, Double)].collect().sortBy(r => (r._1, r._2))
     val snap1 = Wand.updateByQuery(spark, dirU, qs,
@@ -465,12 +477,12 @@ class EngineSpec extends AnyFunSuite {
     assert(dm.filter($"tag".isNull).filter($"lang" === "retagged").count() == 0)
     assert(dm.filter($"tag" === "hit").count() == (expHit - deadId).size)
     // ranks and scores are bit-identical across the update commit
-    val post = Wand.search(spark, dirU, qs, 5)
+    val post = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dirU), qs, 5)
       .select("query_id", "rank", "doc_id", "score")
       .as[(Int, Int, String, Double)].collect().sortBy(r => (r._1, r._2))
     assert(post.toSeq == pre.toSeq, s"drift across update: $post vs $pre")
     // the metadata filter path sees the NEW values
-    val filt = Wand.search(spark, dirU, qs, 400,
+    val filt = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dirU), qs, 400,
       filter = Some(col("lang") === "retagged"))
     assert(filt.select("doc_id").as[String].collect().toSet == expHit - deadId)
     // time travel: the pre-update snapshot still reads the old docmap
@@ -584,7 +596,8 @@ class EngineSpec extends AnyFunSuite {
       out
     }
 
-    def engine() = Wand.significantTerms(spark, dirS, qs, 10)
+    def engine() = Wand.significantTermsSnapshot(spark, SnapshotCatalog.current(spark, dirS),
+        qs, 10)
       .orderBy("rank").select($"term", $"fg_df", $"bg_df", $"score")
       .as[(String, Long, Long, Double)].collect().toSeq
 
@@ -895,7 +908,7 @@ class EngineSpec extends AnyFunSuite {
     IndexBuilder.build(spark, corpus, dirI, BuildConfig(numShards = 4, commitEvery = 4))
     val someIds = corpus.select(IndexBuilder.docIdCol.as("id"))
       .orderBy($"id").limit(5).as[String].collect().toSeq
-    val got = Wand.idsSearch(spark, dirI,
+    val got = Wand.idsSearchSnapshot(spark, SnapshotCatalog.current(spark, dirI),
       Seq(0 -> someIds, 1 -> Seq(someIds.head, "nosuchid")), 10, boost = 2.0)
     // every requested live id matches exactly once, in doc_id order, at boost
     assert(got.filter($"query_id" === 0).count() == 5)
@@ -905,15 +918,18 @@ class EngineSpec extends AnyFunSuite {
     assert(got.filter($"score" =!= 2.0).count() == 0)
     // tombstone one requested id: it must vanish from the match set
     IndexBuilder.delete(spark, dirI, col("doc_id") === someIds(2))
-    val after = Wand.idsSearch(spark, dirI, Seq(0 -> someIds), 10)
+    val after = Wand.idsSearchSnapshot(spark, SnapshotCatalog.current(spark, dirI),
+        Seq(0 -> someIds), 10)
     assert(after.count() == 4)
     assert(after.filter($"doc_id" === someIds(2)).count() == 0,
       "tombstoned id must not match the ids query")
     intercept[IllegalArgumentException] {
-      Wand.idsSearch(spark, dirI, Seq(0 -> Seq.empty[String]), 10)
+      Wand.idsSearchSnapshot(spark, SnapshotCatalog.current(spark, dirI),
+          Seq(0 -> Seq.empty[String]), 10)
     }
     intercept[IllegalArgumentException] {
-      Wand.idsSearch(spark, dirI, Seq(0 -> someIds, 0 -> someIds), 10)
+      Wand.idsSearchSnapshot(spark, SnapshotCatalog.current(spark, dirI),
+          Seq(0 -> someIds, 0 -> someIds), 10)
     }
   }
 
@@ -953,7 +969,8 @@ class EngineSpec extends AnyFunSuite {
     val idFor = hand.toDF().withColumn("doc_id", IndexBuilder.docIdCol)
       .select($"path", $"doc_id").as[(String, String)].collect().toMap
     def hits(text: String, slop: Int): Set[String] =
-      Wand.phraseSearch(spark, dirS, Seq(graft.corpus.RefQuery(0, text)), 10,
+      Wand.phraseSearchSnapshot(spark, SnapshotCatalog.current(spark, dirS),
+          Seq(graft.corpus.RefQuery(0, text)), 10,
         slop = slop).select("doc_id").as[String].collect().toSet
     assert(hits("alpha beta", 0) == Set(idFor("s0")))
     assert(hits("alpha beta", 1) == Set(idFor("s0"), idFor("s1"), idFor("s5")))
@@ -970,14 +987,16 @@ class EngineSpec extends AnyFunSuite {
       val qs = Seq(graft.corpus.RefQuery(0, "alpha beta"))
       val g = Golden.phraseTopK(spark, handDocs, qs, 10, slop = sl)
         .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-      val f = Wand.phraseSearch(spark, dirS, qs, 10, slop = sl)
+      val f = Wand.phraseSearchSnapshot(spark, SnapshotCatalog.current(spark, dirS),
+          qs, 10, slop = sl)
         .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
       val cmp = g.join(f, Seq("query_id", "rank"), "full_outer")
       assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||
         $"g_doc" =!= $"f_doc" || $"g_score" =!= $"f_score").count() == 0, s"slop $sl")
     }
     intercept[IllegalArgumentException] {
-      Wand.phraseSearch(spark, dirS, Seq(graft.corpus.RefQuery(0, "alpha beta")),
+      Wand.phraseSearchSnapshot(spark, SnapshotCatalog.current(spark, dirS),
+          Seq(graft.corpus.RefQuery(0, "alpha beta")),
         10, slop = -1)
     }
   }
@@ -998,7 +1017,8 @@ class EngineSpec extends AnyFunSuite {
     val idFor = hand.toDF().withColumn("doc_id", IndexBuilder.docIdCol)
       .select($"path", $"doc_id").as[(String, String)].collect().toMap
     def hits(text: String, slop: Int = 0): Set[String] =
-      Wand.phrasePrefixSearch(spark, dirP, Seq(graft.corpus.RefQuery(0, text)),
+      Wand.phrasePrefixSearchSnapshot(spark, SnapshotCatalog.current(spark, dirP),
+          Seq(graft.corpus.RefQuery(0, text)),
         10, slop = slop).select("doc_id").as[String].collect().toSet
     // "bet" expands to {beta, betamax}: consecutive matches only at slop 0
     assert(hits("alpha bet") ==
@@ -1025,7 +1045,8 @@ class EngineSpec extends AnyFunSuite {
       val (qf, qe) = Wand.phrasePrefixExpand(spark, snapG, qs)
       val g = Golden.phrasePrefixTopK(spark, docsG, qf, qe, k, slop = sl)
         .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-      val f = Wand.phrasePrefixSearch(spark, dirG, qs, k, slop = sl)
+      val f = Wand.phrasePrefixSearchSnapshot(spark, SnapshotCatalog.current(spark, dirG),
+          qs, k, slop = sl)
         .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
       val cmp = g.join(f, Seq("query_id", "rank"), "full_outer")
       assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||
@@ -1035,7 +1056,8 @@ class EngineSpec extends AnyFunSuite {
     corpusP.unpersist()
     // single analyzed token: use prefixSearch instead
     intercept[IllegalArgumentException] {
-      Wand.phrasePrefixSearch(spark, dirP, Seq(graft.corpus.RefQuery(0, "alpha")), 10)
+      Wand.phrasePrefixSearchSnapshot(spark, SnapshotCatalog.current(spark, dirP),
+          Seq(graft.corpus.RefQuery(0, "alpha")), 10)
     }
     // positionless index refuses
     intercept[IllegalArgumentException] {
@@ -1054,7 +1076,7 @@ class EngineSpec extends AnyFunSuite {
     val handQ = graft.corpus.RefQuery(77, s"${ts(0)} ${ts(1)}")
     val qs = queries.take(3) :+ handQ
     val window = 50
-    val got = Wand.rescorePhrase(spark, indexDir, qs, k, window,
+    val got = Wand.rescorePhraseSnapshot(spark, snap, qs, k, window,
       slop = 1, queryWeight = 1.0, rescoreWeight = 2.0).cache()
     val exp = Golden.rescorePhraseTopK(spark, docs, qs, k, window,
       slop = 1, queryWeight = 1.0, rescoreWeight = 2.0)
@@ -1068,14 +1090,14 @@ class EngineSpec extends AnyFunSuite {
       $"g_doc" =!= $"f_doc" || $"g_score" =!= $"f_score").count() == 0)
     // the secondary actually engaged: some hit scores above its weighted
     // base (i.e. the phrase bonus is nonzero for at least one window doc)
-    val base = Wand.search(spark, indexDir, qs, window)
+    val base = Wand.searchSnapshot(spark, snap, qs, window)
       .withColumnRenamed("score", "base_score").drop("rank")
     assert(got.join(base, Seq("query_id", "doc_id"))
       .filter($"score" > $"base_score" + 1e-12).count() > 0)
     // rescoreWeight = 0 degenerates to the base ranking exactly
-    val noop = Wand.rescorePhrase(spark, indexDir, qs, k, window,
+    val noop = Wand.rescorePhraseSnapshot(spark, snap, qs, k, window,
       slop = 1, queryWeight = 1.0, rescoreWeight = 0.0)
-    val baseK = Wand.search(spark, indexDir, qs, k)
+    val baseK = Wand.searchSnapshot(spark, snap, qs, k)
     val cmp0 = baseK.withColumnRenamed("doc_id", "b_doc")
       .withColumnRenamed("score", "b_score")
       .join(noop.withColumnRenamed("doc_id", "n_doc")
@@ -1084,7 +1106,7 @@ class EngineSpec extends AnyFunSuite {
     assert(cmp0.filter($"b_doc".isNull || $"n_doc".isNull ||
       $"b_doc" =!= $"n_doc" || $"b_score" =!= $"n_score").count() == 0)
     intercept[IllegalArgumentException] {
-      Wand.rescorePhrase(spark, indexDir, qs, k, k - 1)
+      Wand.rescorePhraseSnapshot(spark, snap, qs, k, k - 1)
     }
   }
 
@@ -1133,8 +1155,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("rank_feature / distance_feature: feature boosts, golden-identical") {
-    assert(snap.isComplete) // force the shared lazy build: the dir-based
-    // API below loads the committed snapshot from indexDir
+    assert(snap.isComplete) // the shared index every call below reads
     val fq = queries.take(2) :+ graft.corpus.RefQuery(991, "zzznosuchterm")
     val full = Golden.topK(spark, docs, fq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"),
@@ -1156,36 +1177,36 @@ class EngineSpec extends AnyFunSuite {
         $"g_doc" =!= $"f_doc" || $"g_score" =!= $"f_score").count() == 0, tag)
     }
     pin(fv => Wand.rankFeatureExpr(fv, "saturation", 2.0, pivot = 40.0),
-      Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl", "saturation",
+      Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl", "saturation",
         boost = 2.0, pivot = 40.0), "saturation")
     pin(fv => Wand.rankFeatureExpr(fv, "log", 1.5, scaling = 3.0),
-      Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl", "log",
+      Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl", "log",
         boost = 1.5, scaling = 3.0), "log")
     pin(fv => Wand.rankFeatureExpr(fv, "sigmoid", 2.0, pivot = 40.0,
         exponent = 2.0),
-      Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl", "sigmoid",
+      Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl", "sigmoid",
         boost = 2.0, pivot = 40.0, exponent = 2.0), "sigmoid")
     pin(fv => Wand.distanceFeatureExpr(fv, origin = 60.0, pivot = 15.0,
         boost = 2.5),
-      Wand.distanceFeatureSearch(spark, indexDir, fq, k, "dl",
+      Wand.distanceFeatureSearchSnapshot(spark, snap, fq, k, "dl",
         origin = 60.0, pivot = 15.0, boost = 2.5), "distance")
     // the boost actually reorders vs plain BM25, and a no-hit query
     // stays empty (feature boosts never create matches)
-    val gotSat = Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl",
+    val gotSat = Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl",
       "saturation", boost = 2.0, pivot = 40.0)
     val plain = Wand.searchSnapshot(spark, snap, fq, k)
     assert(gotSat.select("query_id", "rank", "doc_id").except(
       plain.select("query_id", "rank", "doc_id")).count() > 0)
     assert(gotSat.filter($"query_id" === 991).count() == 0)
     intercept[IllegalArgumentException] {
-      Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl", "linear")
+      Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl", "linear")
     }
     intercept[IllegalArgumentException] {
-      Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl", "saturation",
+      Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl", "saturation",
         pivot = 0.0)
     }
     intercept[IllegalArgumentException] {
-      Wand.distanceFeatureSearch(spark, indexDir, fq, k, "dl",
+      Wand.distanceFeatureSearchSnapshot(spark, snap, fq, k, "dl",
         origin = 60.0, pivot = -1.0)
     }
     // the batched multi-variant pass is row-identical to N single calls
@@ -1204,13 +1225,13 @@ class EngineSpec extends AnyFunSuite {
       df.select("query_id", "rank", "doc_id", "score")
         .as[(Int, Int, String, Double)].collect().sortBy(r => (r._1, r._2))
     assert(multi("saturation").sameElements(single(
-      Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl", "saturation",
+      Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl", "saturation",
         boost = 2.0, pivot = 40.0))), "multi:saturation")
     assert(multi("log").sameElements(single(
-      Wand.rankFeatureSearch(spark, indexDir, fq, k, "dl", "log",
+      Wand.rankFeatureSearchSnapshot(spark, snap, fq, k, "dl", "log",
         boost = 1.5, scaling = 3.0))), "multi:log")
     assert(multi("distance").sameElements(single(
-      Wand.distanceFeatureSearch(spark, indexDir, fq, k, "dl",
+      Wand.distanceFeatureSearchSnapshot(spark, snap, fq, k, "dl",
         origin = 60.0, pivot = 15.0, boost = 2.5))), "multi:distance")
     intercept[IllegalArgumentException] {
       Wand.featureBoostMultiSearchSnapshot(spark, snap, fq, k, "dl",
@@ -1219,7 +1240,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("terms lookup: filter terms fetched from an indexed doc") {
-    assert(snap.isComplete) // dir-based API loads from indexDir
+    assert(snap.isComplete) // the shared index the lookup reads
     val lookupId = docs.orderBy($"doc_id").select($"doc_id").as[String].head()
     // driver golden: docs sharing >= 1 distinct analyzed token with the
     // lookup doc, constant score, doc-order rank
@@ -1228,25 +1249,25 @@ class EngineSpec extends AnyFunSuite {
     val lt = toksById(lookupId)
     val expIds = toksById.filter { case (_, ts) => ts.exists(lt) }
       .keys.toSeq.sorted.take(k)
-    val got = Wand.termsLookupSearch(spark, indexDir, 3, lookupId, k,
+    val got = Wand.termsLookupSearchSnapshot(spark, snap, 3, lookupId, k,
       boost = 2.0).orderBy("rank")
     assert(got.select($"doc_id").as[String].collect().toSeq == expIds)
     assert(got.select($"score").as[Double].collect().forall(_ == 2.0))
     assert(got.select($"query_id").distinct().as[Int].head() == 3)
     intercept[IllegalArgumentException] {
-      Wand.termsLookupSearch(spark, indexDir, 0, "zzz-no-such-doc", k)
+      Wand.termsLookupSearchSnapshot(spark, snap, 0, "zzz-no-such-doc", k)
     }
     // an over-budget lookup doc is rejected, never silently truncated
     intercept[IllegalArgumentException] {
-      Wand.termsLookupSearch(spark, indexDir, 0, lookupId, k, maxTerms = 3)
+      Wand.termsLookupSearchSnapshot(spark, snap, 0, lookupId, k, maxTerms = 3)
     }
   }
 
   test("scripted_metric: map/combine/reduce over matched docmap rows") {
     assert(snap.isComplete)
     val fq = queries.take(2) :+ graft.corpus.RefQuery(995, "zzznosuchterm")
-    val got = Wand.scriptedMetricAgg[(Long, Long, Long), (Long, Long, Long)](
-        spark, indexDir, fq,
+    val got = Wand.scriptedMetricAggSnapshot[(Long, Long, Long), (Long, Long, Long)](
+        spark, snap, fq,
         r => (1L, r.getAs[Long]("dl"), r.getAs[Long]("dl")),
         (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)),
         xs => xs.reduce((a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3))))
@@ -2009,7 +2030,7 @@ class EngineSpec extends AnyFunSuite {
     val idFor = hand.toDF().withColumn("doc_id", IndexBuilder.docIdCol)
       .select($"path", $"doc_id").as[(String, String)].collect().toMap
     val qs = Seq(graft.corpus.RefQuery(0, "alpha beta"))
-    val got = Wand.phraseSearch(spark, dirF, qs, 10,
+    val got = Wand.phraseSearchSnapshot(spark, SnapshotCatalog.current(spark, dirF), qs, 10,
       filter = Some($"lang" === "scala"))
     assert(got.select("doc_id").as[String].collect().toSet ==
       Set(idFor("p0"), idFor("p3")))
@@ -2040,7 +2061,8 @@ class EngineSpec extends AnyFunSuite {
     val idFor = hand.toDF().withColumn("doc_id", IndexBuilder.docIdCol)
       .select($"path", $"doc_id").as[(String, String)].collect().toMap
     def hits(text: String): Set[String] =
-      Wand.phraseSearch(spark, dirH, Seq(graft.corpus.RefQuery(0, text)), 10)
+      Wand.phraseSearchSnapshot(spark, SnapshotCatalog.current(spark, dirH),
+          Seq(graft.corpus.RefQuery(0, text)), 10)
         .select("doc_id").as[String].collect().toSet
     assert(hits("alpha beta") == Set(idFor("p0"), idFor("p2"), idFor("p4")))
     assert(hits("beta alpha beta") == Set(idFor("p4"))) // duplicate-term phrase
@@ -2051,7 +2073,7 @@ class EngineSpec extends AnyFunSuite {
       val qs = Seq(graft.corpus.RefQuery(0, p))
       val g = Golden.phraseTopK(spark, handDocs, qs, 10)
         .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-      val f = Wand.phraseSearch(spark, dirH, qs, 10)
+      val f = Wand.phraseSearchSnapshot(spark, SnapshotCatalog.current(spark, dirH), qs, 10)
         .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
       val cmp = g.join(f, Seq("query_id", "rank"), "full_outer")
       assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||
@@ -2071,7 +2093,8 @@ class EngineSpec extends AnyFunSuite {
     }
     val golden = Golden.phraseTopK(spark, docs, phrases, k)
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-    val fast = Wand.phraseSearch(spark, dirP, phrases, k) // via dir: flag round-trips JSON
+    val fast = Wand.phraseSearchSnapshot(spark, SnapshotCatalog.current(spark, dirP),
+        phrases, k) // loaded from dir: flag round-trips JSON
       .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score").cache()
     assert(fast.count() >= phrases.size) // each phrase finds at least its source doc
     val cmp = golden.join(fast, Seq("query_id", "rank"), "full_outer")
@@ -2351,11 +2374,11 @@ class EngineSpec extends AnyFunSuite {
     val dirF = TestSpark.tempDir("graft-facet-del")
     IndexBuilder.build(spark, hand, dirF, BuildConfig(numShards = 2, commitEvery = 2))
     val qs = Seq(graft.corpus.RefQuery(0, "zebra"))
-    val before = Wand.facetCounts(spark, dirF, qs, "lang")
+    val before = Wand.facetCountsSnapshot(spark, SnapshotCatalog.current(spark, dirF), qs, "lang")
       .as[(Int, String, Long)].collect().toSet
     assert(before == Set((0, "scala", 2L), (0, "py", 1L)))
     IndexBuilder.delete(spark, dirF, col("path") === "p0")
-    val after = Wand.facetCounts(spark, dirF, qs, "lang")
+    val after = Wand.facetCountsSnapshot(spark, SnapshotCatalog.current(spark, dirF), qs, "lang")
       .as[(Int, String, Long)].collect().toSet
     assert(after == Set((0, "scala", 1L), (0, "py", 1L)))
   }
@@ -3465,7 +3488,7 @@ class EngineSpec extends AnyFunSuite {
     val idFor = hand.toDF().withColumn("doc_id", IndexBuilder.docIdCol)
       .select($"path", $"doc_id").as[(String, String)].collect().toMap
     def hits(q: SpanQuery): Set[String] =
-      Wand.spanSearch(spark, dirS, Seq(0 -> q), 10)
+      Wand.spanSearchSnapshot(spark, SnapshotCatalog.current(spark, dirS), Seq(0 -> q), 10)
         .select("doc_id").as[String].collect().toSet
     def paths(ps: String*): Set[String] = ps.map(idFor).toSet
 
@@ -3499,7 +3522,7 @@ class EngineSpec extends AnyFunSuite {
       4 -> SpanNear(Seq(SpanTerm("alpha"), SpanTerm("beta"), SpanTerm("gamma")), 2))
     val g = Golden.spanTopK(spark, handDocs, spanQs, 10)
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-    val f = Wand.spanSearch(spark, dirS, spanQs, 10)
+    val f = Wand.spanSearchSnapshot(spark, SnapshotCatalog.current(spark, dirS), spanQs, 10)
       .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
     val cmp = g.join(f, Seq("query_id", "rank"), "full_outer")
     assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||
@@ -3661,7 +3684,7 @@ class EngineSpec extends AnyFunSuite {
         .cast("int") * 2).as("rating")).filter($"rating" > 0)
     val ratings = ratingBase.crossJoin(qs.map(_.query_id).toDF("query_id"))
     val k = 10
-    val got = Wand.rankEval(spark, indexDir, qs, ratings, k)
+    val got = Wand.rankEvalSnapshot(spark, snap, qs, ratings, k)
       .collect().map(r => r.getInt(0) -> r).toMap
 
     val rMap = ratingBase.select($"doc_id", $"rating")
@@ -3738,7 +3761,7 @@ class EngineSpec extends AnyFunSuite {
       BuildConfig(numShards = 2, commitEvery = 2)) // no positions needed
     val idFor = hand.toDF().withColumn("doc_id", IndexBuilder.docIdCol)
       .select($"doc_id", $"path").as[(String, String)].collect().toMap
-    val res = Wand.highlightSearch(spark, dirH,
+    val res = Wand.highlightSearchSnapshot(spark, SnapshotCatalog.current(spark, dirH),
       Seq(graft.corpus.RefQuery(0, "alpha beta")), 10, fragSize = 3)
       .select($"doc_id", $"highlight").as[(String, String)].collect()
       .map { case (id, h) => idFor(id) -> h }.toMap
@@ -3747,16 +3770,17 @@ class EngineSpec extends AnyFunSuite {
     assert(res("h2") == "<em>alpha</em> pad <em>beta</em>")
     assert(res("h3") == "<em>alpha</em>")
     // custom tags, and ranks/scores pass through from the base search
-    val custom = Wand.highlightSearch(spark, dirH,
+    val custom = Wand.highlightSearchSnapshot(spark, SnapshotCatalog.current(spark, dirH),
       Seq(graft.corpus.RefQuery(0, "beta")), 10, fragSize = 2,
       preTag = "[", postTag = "]")
-    val base = Wand.search(spark, dirH, Seq(graft.corpus.RefQuery(0, "beta")), 10)
+    val base = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dirH),
+        Seq(graft.corpus.RefQuery(0, "beta")), 10)
     val cmp = custom.drop("highlight").join(base,
       Seq("query_id", "rank", "doc_id", "score"), "full_outer")
     assert(cmp.count() == base.count())
     assert(custom.filter($"highlight".contains("[beta]")).count() == custom.count())
     intercept[IllegalArgumentException] {
-      Wand.highlightSearch(spark, dirH,
+      Wand.highlightSearchSnapshot(spark, SnapshotCatalog.current(spark, dirH),
         Seq(graft.corpus.RefQuery(0, "beta")), 10, fragSize = 0)
     }
   }
@@ -3780,7 +3804,7 @@ class EngineSpec extends AnyFunSuite {
         SpanTerm("object")))
     val g = Golden.spanTopK(spark, docs, qs, k)
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-    val f = Wand.spanSearch(spark, dirSp, qs, k)
+    val f = Wand.spanSearchSnapshot(spark, SnapshotCatalog.current(spark, dirSp), qs, k)
       .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
       .cache()
     try {
@@ -3860,7 +3884,7 @@ class EngineSpec extends AnyFunSuite {
     val idFor = hand.toDF().withColumn("doc_id", IndexBuilder.docIdCol)
       .select($"path", $"doc_id").as[(String, String)].collect().toMap
     def hits(q: SpanQuery): Set[String] =
-      Wand.spanSearch(spark, dirI, Seq(0 -> q), 10)
+      Wand.spanSearchSnapshot(spark, SnapshotCatalog.current(spark, dirI), Seq(0 -> q), 10)
         .select("doc_id").as[String].collect().toSet
     def paths(ps: String*): Set[String] = ps.map(idFor).toSet
 
@@ -3911,7 +3935,7 @@ class EngineSpec extends AnyFunSuite {
         Intervals.matchRule("gamma", 0, false)))
     val g = Golden.spanTopK(spark, handDocs, intQs, 10)
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-    val f = Wand.spanSearch(spark, dirI, intQs, 10)
+    val f = Wand.spanSearchSnapshot(spark, SnapshotCatalog.current(spark, dirI), intQs, 10)
       .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
     val cmp = g.join(f, Seq("query_id", "rank"), "full_outer")
     assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||
@@ -4109,7 +4133,8 @@ class EngineSpec extends AnyFunSuite {
       IndexBuilder.delete(spark, dirP, $"doc_id" === victim)
       // pinned snapshot: unchanged; fresh load: one doc gone
       assert(Wand.scrollDrainSnapshot(spark, pinned, sq, pageSize).count() == nBefore)
-      val after = Wand.scrollDrain(spark, dirP, sq, pageSize)
+      val after = Wand.scrollDrainSnapshot(spark, SnapshotCatalog.current(spark, dirP),
+          sq, pageSize)
       assert(after.count() < nBefore)
       assert(after.filter($"doc_id" === victim).count() == 0)
     } finally before.unpersist()
@@ -4375,7 +4400,7 @@ class EngineSpec extends AnyFunSuite {
         ordered = false), Intervals.matchRule("if", 0, false)))
     val g = Golden.spanTopK(spark, docs, qs, k)
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-    val f = Wand.spanSearch(spark, dirIv, qs, k)
+    val f = Wand.spanSearchSnapshot(spark, SnapshotCatalog.current(spark, dirIv), qs, k)
       .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
       .cache()
     try {

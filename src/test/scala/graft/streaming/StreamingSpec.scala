@@ -177,7 +177,8 @@ class StreamingSpec extends AnyFunSuite {
         .select(IndexBuilder.docIdCol.as("doc_id"), $"content")
       val golden = graft.search.Golden.topK(spark, allDocs, queries, 5)
         .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-      val fast = graft.search.Wand.search(spark, dir, queries, 5)
+      val fast = graft.search.Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dir),
+          queries, 5)
         .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
       val cmp = golden.join(fast, Seq("query_id", "rank"), "full_outer")
       assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||

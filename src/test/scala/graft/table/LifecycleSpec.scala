@@ -14,6 +14,16 @@ class LifecycleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("current: the one load-or-throw names the dir, else equals load") {
+    val empty = TestSpark.tempDir("graft-current-empty")
+    val e = intercept[IllegalStateException](SnapshotCatalog.current(spark, empty))
+    assert(e.getMessage.contains(empty))
+    val dir = TestSpark.tempDir("graft-current")
+    IndexBuilder.build(spark, CorpusGen.corpus(spark, 60L, seed = 17L), dir,
+      BuildConfig(numShards = 2, commitEvery = 2))
+    assert(SnapshotCatalog.current(spark, dir).id == SnapshotCatalog.load(spark, dir).get.id)
+  }
+
   test("history, time travel, and expiration with orphan GC") {
     val dir = TestSpark.tempDir("graft-lifecycle")
     val all = CorpusGen.corpus(spark, 800L, seed = 91L).cache()
@@ -42,7 +52,8 @@ class LifecycleSpec extends AnyFunSuite {
     assert(parentOf(cur) == -1L)
 
     // time travel by id: the pre-append result set, bit-identical
-    val travelled = Wand.searchAt(spark, dir, snapBase.id, queries, 5)
+    val travelled = Wand.searchSnapshot(spark, SnapshotCatalog.loadId(spark, dir, snapBase.id),
+        queries, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(travelled == preAppend)
     // time travel by timestamp resolves the same snapshot
@@ -51,7 +62,7 @@ class LifecycleSpec extends AnyFunSuite {
     assert(SnapshotCatalog.resolveAsOf(spark, dir, 0L).isEmpty)
 
     // expire all but the current snapshot
-    val postAppend = Wand.search(spark, dir, queries, 5)
+    val postAppend = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dir), queries, 5)
       .orderBy("query_id", "rank").collect().toSeq
     val r = SnapshotCatalog.expireSnapshots(spark, dir, retainLast = 1)
     assert(r.expiredIds.contains(snapBase.id))
@@ -62,10 +73,11 @@ class LifecycleSpec extends AnyFunSuite {
     (snapApp.segmentDirs ++ snapApp.docmapDirs ++ Seq(snapApp.termstatsDir)).foreach(d =>
       assert(fs.exists(new org.apache.hadoop.fs.Path(d)), s"GC deleted live dir $d"))
     // current stays byte-identically queryable; the expired id does not
-    val postExpire = Wand.search(spark, dir, queries, 5)
+    val postExpire = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dir), queries, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(postExpire == postAppend)
-    assertThrows[Exception](Wand.searchAt(spark, dir, snapBase.id, queries, 5))
+    assertThrows[Exception](Wand.searchSnapshot(spark,
+      SnapshotCatalog.loadId(spark, dir, snapBase.id), queries, 5))
     // idempotent: nothing left to expire
     assert(SnapshotCatalog.expireSnapshots(spark, dir, 1).expiredIds.isEmpty)
   }
@@ -84,8 +96,10 @@ class LifecycleSpec extends AnyFunSuite {
     val r = SnapshotCatalog.expireSnapshots(spark, dir, retainLast = 2)
     assert(r.expiredIds.contains(s0.id))
     assert(!r.expiredIds.contains(s1.id) && !r.expiredIds.contains(s2.id))
-    assert(Wand.searchAt(spark, dir, s1.id, queries, 5).count() > 0)
-    assert(Wand.searchAt(spark, dir, s2.id, queries, 5).count() > 0)
+    assert(Wand.searchSnapshot(spark, SnapshotCatalog.loadId(spark, dir, s1.id),
+        queries, 5).count() > 0)
+    assert(Wand.searchSnapshot(spark, SnapshotCatalog.loadId(spark, dir, s2.id),
+        queries, 5).count() > 0)
   }
 
   test("rollback: past state under a fresh id; writers continue collision-free") {
@@ -95,7 +109,7 @@ class LifecycleSpec extends AnyFunSuite {
     val queries = CorpusGen.queries(6, seed = 17L)
     val snapBase = IndexBuilder.build(spark, parts(0), dir,
       BuildConfig(numShards = 4, commitEvery = 4, heavyThreshold = 200, saltBuckets = 4))
-    val baseRes = Wand.search(spark, dir, queries, 5)
+    val baseRes = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dir), queries, 5)
       .orderBy("query_id", "rank").collect().toSeq
     val snapApp = IndexBuilder.append(spark, parts(1), dir)
 
@@ -104,11 +118,12 @@ class LifecycleSpec extends AnyFunSuite {
     // and the state is the base state bit-for-bit
     assert(rb.id > snapApp.id && rb.parentId == snapApp.id)
     assert(rb.stats == snapBase.stats && rb.segmentDirs == snapBase.segmentDirs)
-    val rolled = Wand.search(spark, dir, queries, 5)
+    val rolled = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dir), queries, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(rolled == baseRes)
     // the abandoned append stays time-travelable
-    assert(Wand.searchAt(spark, dir, snapApp.id, queries, 5).count() > 0)
+    assert(Wand.searchSnapshot(spark, SnapshotCatalog.loadId(spark, dir, snapApp.id),
+        queries, 5).count() > 0)
 
     // a NEW append off the rolled-back state gets fresh ids/dirs and
     // stays rank- and bit-identical vs golden over base ∪ parts(2)
@@ -120,7 +135,7 @@ class LifecycleSpec extends AnyFunSuite {
       .select(IndexBuilder.docIdCol.as("doc_id"), $"content")
     val golden = graft.search.Golden.topK(spark, docs, queries, 5)
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
-    val fast = Wand.search(spark, dir, queries, 5)
+    val fast = Wand.searchSnapshot(spark, SnapshotCatalog.current(spark, dir), queries, 5)
       .withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
     val cmp = golden.join(fast, Seq("query_id", "rank"), "full_outer")
     assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||
